@@ -35,7 +35,7 @@ class ColumnSpec:
     # silverLayer/BuildSilverLayer.py:156), then to_date with the format.
     date_regex: str | None = None
     date_format: str | None = None
-    cast: DataType | str | None = None
+    cast: DataType | str | None = None  # uncastable values become NULL
     # NULL and '' both become this default (reference F11/F12,
     # silverLayer/BuildSilverLayer.py:161-163 'Not Provided').
     default: Any | None = None
@@ -76,7 +76,9 @@ def _clean_expr(spec: ColumnSpec) -> Column:
         mapping = F.create_map(*[F.lit(x) for kv in spec.value_map.items() for x in kv])
         col = mapping[col]
     if spec.cast is not None:
-        col = col.cast(spec.cast)
+        # try_cast: an uncastable value (CERT "10X") becomes NULL and so
+        # lands in quarantine; a plain cast raises under ANSI mode.
+        col = col.try_cast(spec.cast)
     if spec.default is not None:
         col = F.when(col.isNull() | (col.cast("string") == ""), F.lit(spec.default)).otherwise(col)
     return col.alias(spec.out)

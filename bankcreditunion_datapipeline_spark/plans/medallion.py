@@ -24,7 +24,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.analytics import derive_year_quarter, pivot_by_period
@@ -241,18 +241,6 @@ def gold_fact(silver: DataFrame) -> DataFrame:
     )
 
 
-def _gold_pivot(silver: DataFrame, measure_col: str, quarters: list[str] | None) -> DataFrame:
-    df = silver.withColumn("q", F.date_format("quarter_date", "yyyy-MM-dd"))
-    pv = pivot_by_period(
-        df,
-        keys=["charter_number", "institution_type", "name"],
-        period_col="q",
-        measure=F.first(measure_col),
-        values=quarters,
-    )
-    return select_sort_dated_cols(pv, ["charter_number", "institution_type", "name"], sort_desc=True)
-
-
 def gold_quarterly_assets(silver: DataFrame, quarters: list[str] | None = None) -> DataFrame:
     """quarterly_assets_table (:183-194) -- data-named quarter columns,
     newest first; ONE shuffle via pivot (vs the reference's O(Q) join loop).
@@ -265,32 +253,58 @@ def gold_quarterly_deposits(silver: DataFrame, quarters: list[str] | None = None
     return gold_quarterly_pivot(silver, "deposits_total", quarters)
 
 
+def _quarter_label() -> Column:
+    return F.date_format("quarter_date", "yyyy-MM-dd")
+
+
 def gold_quarterly_pivot(
     silver: DataFrame, measure_col: str, quarters: list[str] | None = None
 ) -> DataFrame:
-    return _gold_pivot(silver, measure_col, quarters)
+    pv = pivot_by_period(
+        silver.withColumn("q", _quarter_label()),
+        keys=["charter_number", "institution_type", "name"],
+        period_col="q",
+        measure=F.first(measure_col),
+        values=quarters,
+    )
+    return select_sort_dated_cols(pv, ["charter_number", "institution_type", "name"], sort_desc=True)
 
 
 def run_gold(silver: DataFrame, out_dir: str, quarters: list[str] | None = None) -> None:
     """Publish the four gold tables with the reference's disk partitioning
-    (goldLayer/BuildGoldLayer.py:212-237)."""
+    (goldLayer/BuildGoldLayer.py:212-237).
+
+    The two partitioned tables are hash-repartitioned on their partition
+    columns to `defaultParallelism` partitions before the write, so every
+    core writes and each partition directory is still written by exactly
+    one task: one file per leaf directory. The count is explicit because
+    AQE coalesces a bare `repartition(cols)` of a small table back to one
+    task. Without `quarters`, the quarter list is computed once and shared by
+    both pivots instead of each pivot running its own distinct pre-pass.
+    """
     from ..sinks import write_gold
 
-    # O3: cluster rows by name inside each write partition (reference
+    n = silver.sparkSession.sparkContext.defaultParallelism
+    # O3: cluster rows by name inside each directory file (reference
     # repartition + sortWithinPartitions, goldLayer/BuildGoldLayer.py:158-159)
-    # so downstream name-range scans read contiguous row groups.
+    # so downstream name-range scans read contiguous row groups. The sort
+    # leads with the partition columns: the writer needs rows ordered by
+    # them and would otherwise replace a name-only sort with its own.
     write_gold(
         gold_directory(silver)
-        .repartition("institution_type", "state")
-        .sortWithinPartitions("name"),
+        .repartition(n, "institution_type", "state")
+        .sortWithinPartitions("institution_type", "state", "name"),
         f"{out_dir}/institutions_directory_by_type",
         partition_by=["institution_type", "state"],
     )
     write_gold(
-        gold_fact(silver),
+        gold_fact(silver).repartition(n, "year", "quarter", "state"),
         f"{out_dir}/assets_deposits_by_state",
         partition_by=["year", "quarter", "state"],
     )
+    if quarters is None:
+        labels = silver.select(_quarter_label().alias("q")).distinct().collect()
+        quarters = sorted(r.q for r in labels)
     write_gold(
         gold_quarterly_assets(silver, quarters),
         f"{out_dir}/quarterly_assets_table",

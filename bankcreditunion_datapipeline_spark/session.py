@@ -14,6 +14,18 @@ configs modernized for Spark 4.x and 100 TB posture:
   (SURVEY §2.8 F5-F7) has stable null-on-malformed semantics.
 - Case-sensitive resolution kept from the reference (pipeline1.py:17) --
   NCUA bronze has mixed-case column names like `Acct_891`.
+- Partition discovery on the driver: Spark lists a directory's children
+  with a distributed job once there are more than
+  spark.sql.sources.parallelPartitionDiscovery.threshold (default 32) of
+  them, and the gold fact table has 54 `state=` directories under every
+  `year=/quarter=` parent, so each pruned gold read fired one listing job
+  per parent. Under `local[n]` that job runs in the driver JVM anyway: it
+  adds scheduling round trips and no parallelism, so the threshold is
+  raised above the engine's widest partition fan-out. (A cluster reading
+  far wider partition levels from an object store can pass a lower value
+  through `extra_conf`.) Nothing depends on it for correctness -- a plain
+  session (the driver contract's) lists the same files, just with more
+  jobs, and the testdata tables are unpartitioned.
 """
 
 from __future__ import annotations
@@ -23,6 +35,10 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_APP_NAME = "bankcreditunion-datapipeline-spark"
+# Child directories one parent may have and still be listed on the driver;
+# the engine's widest partition level is the gold fact table's 54 `state=`
+# directories under each `year=/quarter=` parent.
+DRIVER_LISTING_THRESHOLD = 1024
 
 
 def default_parallelism() -> int:
@@ -59,6 +75,10 @@ def build_session(
         # Quiet progress bars in test/bench output.
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", "false")
+        .config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(DRIVER_LISTING_THRESHOLD),
+        )
     )
     if master is None:
         master = os.environ.get("SPARK_MASTER", f"local[{cpus}]")

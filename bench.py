@@ -1,7 +1,10 @@
 """Benchmark harness: runs the registered headline queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]
 and prints ONE JSON line:
-  {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+  {"metric": ..., "value": N, "unit": "sec", "n_failed": N, "sf": ...}
+
+A query that raises is recorded as -1.0, left out of the total and counted
+in `n_failed`; any failure makes the exit status 1.
 """
 
 from __future__ import annotations
@@ -81,6 +84,7 @@ def main() -> None:
     ordered = sorted(v for v in timings.values() if v >= 0)
     median = round(ordered[len(ordered) // 2], 3) if ordered else 0.0
     n_ok = len(ordered)
+    n_failed = len(timings) - n_ok
 
     # The harness keeps only the last ~2000 chars of stdout and parses the
     # JSON from that.  The per-query map outgrew that window at ~180
@@ -106,6 +110,7 @@ def main() -> None:
         "sf": sf,
         "cpus": cpus,
         "n_queries": len(timings),
+        "n_failed": n_failed,
         "avg_query_sec": round(total / n_ok, 3) if n_ok else 0.0,
         "median_query_sec": median,
         "storage_hwm": hwm,
@@ -123,6 +128,12 @@ def main() -> None:
         prev_cpus = 0
     if cpus >= prev_cpus:
         paths.append(main_path)
+    else:
+        print(
+            f"# WARNING: {main_path} not written: it records a {prev_cpus}-core run "
+            f"and this run has {cpus} cores",
+            file=sys.stderr,
+        )
     for sidecar_path in paths:
         with open(sidecar_path, "w") as fh:
             json.dump(payload, fh, indent=1, sort_keys=True)
@@ -141,6 +152,7 @@ def main() -> None:
             "sf": sf,
             "cpus": cpus,
             "n_queries": len(timings),
+            "n_failed": n_failed,
             # corpus grows every round -- normalize totals across rounds
             "avg_query_sec": round(total / n_ok, 3) if n_ok else 0.0,
             "median_query_sec": median,
@@ -152,6 +164,8 @@ def main() -> None:
     assert len(line) < 1900, f"bench line {len(line)} chars; capture window is ~2000"
     print(line)
     spark.stop()
+    if n_failed:
+        sys.exit(1)
 
 
 if __name__ == "__main__":

@@ -4,16 +4,19 @@ silver financial_institution -> gold tables, with quarantine observability."""
 from __future__ import annotations
 
 import datetime
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from bankcreditunion_datapipeline_spark.plans.medallion import (
+    US_STATES,
     build_silver,
     gold_directory,
     gold_fact,
     gold_quarterly_assets,
     gold_quarterly_deposits,
+    run_gold,
 )
 from bankcreditunion_datapipeline_spark.schemas import (
     FINANCIAL_INSTITUTION,
@@ -30,6 +33,7 @@ def bronze(spark):
             ("1", "102", "new york", "2", "Empire Trust", "3/31/2020", "new york", None),
             ("0", "103", "Austin", "3", "Closed Bank", "3/31/2020", "TEXAS", "x.com"),  # inactive
             ("1", "104", "Boise", "4", "Bad Date Bank", "2020-03-31", "IDAHO", ""),  # malformed REPDTE ok (unused col)
+            ("1", "10X", "Reno", "5", "Bad Cert Bank", "3/31/2020", "NEVADA", "x.com"),  # non-numeric CERT -> quarantine
         ],
         "ACTIVE string, CERT string, CITY string, ID string, NAME string, REPDTE string, STNAME string, WEBADDR string",
     )
@@ -100,6 +104,9 @@ def test_quarantine_observability(spark, bronze):
     reasons = {(r._source, r._reject_reason) for r in q}
     assert ("fdic_financials", "quarter_date") in reasons  # malformed yyyyMMdd
     assert ("ncua_foicu", "state") in reasons  # unknown abbreviation
+    # a non-numeric charter number is quarantined, not an ANSI cast error
+    bad_cert = [r for r in q if r._source == "fdic_institutions"]
+    assert [(r.name, r._reject_reason) for r in bad_cert] == [("BAD CERT BANK", "charter_number")]
 
 
 def test_gold_directory_unique(spark, bronze):
@@ -137,12 +144,70 @@ def test_gold_quarterly_pivots(spark, bronze):
     assert drow["2020-03-31"] == 400 and drow["2020-06-30"] is None
 
 
-def test_gold_roundtrip_write_read(spark, bronze, tmp_path):
-    from bankcreditunion_datapipeline_spark.plans.medallion import run_gold
+def _leaf_parquet_files(root) -> dict[str, int]:
+    """Parquet file count of every leaf directory under `root`."""
+    return {
+        d: sum(f.endswith(".parquet") for f in files)
+        for d, subdirs, files in os.walk(root)
+        if not subdirs
+    }
 
+
+def _wide_silver(spark, banks_per_state: int = 1):
+    """Banks in every state: more `state=` directories under one
+    year/quarter parent than Spark's default parallel-listing threshold
+    (32). Each state's banks arrive in descending name order."""
+    rows = [
+        (10 * i + k, "City", f"BANK {i:02d}-{k}", datetime.date(2020, 3, 31), state,
+         "Not Provided", 100 + k, 50 + k, "bank")
+        for i, state in enumerate(sorted(US_STATES.values()))
+        for k in reversed(range(banks_per_state))
+    ]
+    return spark.createDataFrame(rows, FINANCIAL_INSTITUTION)
+
+
+def test_gold_roundtrip_write_read(spark, bronze, tmp_path):
     silver = build_silver(*bronze).financial_institution
     run_gold(silver, str(tmp_path))
     directory = spark.read.parquet(str(tmp_path / "institutions_directory_by_type"))
     assert directory.count() == gold_directory(silver).count()
     # partition columns survive the round trip
     assert set(["institution_type", "state"]) <= set(directory.columns)
+
+    wide = tmp_path / "wide"
+    run_gold(_wide_silver(spark), str(wide))
+    # each partition directory is written by exactly one task: one file
+    for table in (tmp_path, wide):
+        for name in ("institutions_directory_by_type", "assets_deposits_by_state"):
+            leaves = _leaf_parquet_files(table / name)
+            assert leaves and set(leaves.values()) == {1}, (name, leaves)
+
+    # a pruned read lists the 54 state directories on the driver: schema
+    # inference + the collect, no distributed listing job per parent
+    sc = spark.sparkContext
+    group = "medallion-pruned-gold-read"
+    sc.setJobGroup(group, "pruned gold read")
+    try:
+        rows = (
+            spark.read.parquet(str(wide / "assets_deposits_by_state"))
+            .filter((F.col("year") == 2020) & (F.col("quarter") == 1) & (F.col("state") == "Texas"))
+            .collect()
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(rows) == 1
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+
+
+def test_gold_directory_files_sorted_by_name(spark, tmp_path):
+    import pyarrow.parquet as pq
+
+    run_gold(_wide_silver(spark, banks_per_state=3), str(tmp_path))
+    leaves = _leaf_parquet_files(tmp_path / "institutions_directory_by_type")
+    assert len(leaves) == len(US_STATES)
+    for d in leaves:
+        for f in os.listdir(d):
+            if f.endswith(".parquet"):
+                names = pq.read_table(os.path.join(d, f), columns=["name"]).column("name").to_pylist()
+                assert len(names) == 3 and names == sorted(names), (d, names)
